@@ -24,7 +24,10 @@ tree is exactly the tree its green rows certified.
 Determinism contract (mirrors `_auto_rotate`'s): the fingerprint is a
 pure function of committed source text, so any two checkouts of the
 same commit agree. Only IN-PACKAGE objects enter the closure —
-pyspark / stdlib churn must not invalidate evidence.
+pyspark / stdlib churn must not invalidate evidence. Paths resolved
+from a module file (the committed reference sample, ``.scratch``)
+reach the closure as constant values and oracle text, so the checkout
+root is folded to a placeholder before hashing.
 """
 
 from __future__ import annotations
@@ -33,10 +36,13 @@ import ast
 import hashlib
 import importlib
 import inspect
+import os
+import re
 import textwrap
 import types
 
 _PKG_ROOT = __name__.split(".")[0]  # "music_streaming_etl_spark"
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _resolve_relative(module: str, anchor_module: str) -> str | None:
@@ -142,7 +148,14 @@ def _local_imports(fn, sources: dict[str, str], seen: set[int]) -> None:
                 # value is closure, keyed by the module that DEFINES
                 # it — same convention the __globals__ path uses for
                 # the reading module.
-                sources.setdefault(f"const:{resolved}.{alias.name}", repr(obj))
+                sources.setdefault(f"const:{resolved}.{alias.name}", _const_repr(obj))
+
+
+def _const_repr(obj) -> str:
+    """A constant's value as closure text. Object reprs inside it (a
+    dict of decoder functions) carry a per-process memory address,
+    which is not source: it is dropped."""
+    return re.sub(r" at 0x[0-9a-fA-F]+", "", repr(obj))
 
 
 def _is_in_package(obj) -> bool:
@@ -211,7 +224,7 @@ def _closure_sources(fn, sources: dict[str, str], seen: set[int]) -> None:
             # closure. Module-qualified — same-named constants in
             # different plan modules must not collide.
             mod = getattr(fn, "__module__", "?")
-            sources.setdefault(f"const:{mod}.{name}", repr(obj))
+            sources.setdefault(f"const:{mod}.{name}", _const_repr(obj))
 
 
 def key_fingerprint(fn, oracle: str | None) -> str:
@@ -219,12 +232,16 @@ def key_fingerprint(fn, oracle: str | None) -> str:
     sources: dict[str, str] = {}
     _closure_sources(fn, sources, set())
     h = hashlib.md5()
+
+    def text(s: str) -> bytes:
+        return s.replace(_CHECKOUT, "<checkout>").encode()
+
     for ident in sorted(sources):
         h.update(ident.encode())
         h.update(b"\x00")
-        h.update(sources[ident].encode())
+        h.update(text(sources[ident]))
         h.update(b"\x00")
-    h.update((oracle or "<rows-only>").encode())
+    h.update(text(oracle or "<rows-only>"))
     return h.hexdigest()
 
 

@@ -830,21 +830,29 @@ def q_scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The binary-ingest fixture is the reference's OWN data drop (the three
-# stream CSV objects its DAG downloads from S3, ref
-# dags/music_streaming_etl_dags.py:105-121) — a fixed path independent
-# of sf_dir, so the oracle (DuckDB read_blob on the same glob) stays a
-# static SQL string.
-BINARY_FIXTURE_DIR = "/root/reference/data/streams"
+# Inputs of scan_binary_ingest and ref_pipeline_genre_kpis: a small
+# SYNTHETIC sample committed under plans/fixtures/, written by
+# scripts/make_reference_sample.py. It keeps the reference's CSV layout
+# (the three stream objects its DAG downloads from S3, ref
+# dags/music_streaming_etl_dags.py:105-121, header
+# user_id,track_id,listen_time; users.csv with the five USERS columns),
+# but no real values. The reference snapshot ships no songs.csv
+# (.MISSING_LARGE_BLOBS), so songs is still derived from track_id.
+# Resolved from this file, so the registry reads only the repo and
+# sf_dir, and the oracles stay static SQL strings.
+REF_SAMPLE_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "fixtures", "reference_sample"
+)
+BINARY_FIXTURE_DIR = os.path.join(REF_SAMPLE_DIR, "streams")
 
 
 def q_scan_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2-analog for opaque binary objects (``binaryFile`` source) —
-    the multimodal ingest entry point: each file becomes one row of
-    (file_name, n_bytes, content_md5), listing and reads distributed
-    across tasks. The md5 rides on the HEX of the bytes because the
-    oracle's md5 only takes strings — both engines hex uppercase, so
-    the digests agree."""
+    the multimodal ingest entry point: each of the sample's three
+    stream CSV objects becomes one row of (file_name, n_bytes,
+    content_md5), listing and reads distributed across tasks. The md5
+    rides on the HEX of the bytes because the oracle's md5 only takes
+    strings — both engines hex uppercase, so the digests agree."""
     from ..sources.io import scan_binary_files
 
     bins = scan_binary_files(spark, BINARY_FIXTURE_DIR, path_glob="*.csv")
@@ -863,29 +871,24 @@ FROM read_blob('{BINARY_FIXTURE_DIR}/*.csv')
 """
 
 
-REF_DATA_DIR = "/root/reference/data"
-
-
-def q_ref_pipeline_genre_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's ACTUAL pipeline on its ACTUAL data: the 3 real
-    stream CSV objects + the real 50k-user table through the full
-    compute_kpis genre branch (extract → enrich joins → fused
-    mode+agg), oracle-checked end-to-end. songs.csv is absent from
-    the reference snapshot (.MISSING_LARGE_BLOBS), so the songs dim
-    derives deterministically from each track_id — same synthesis on
-    both engines, so the comparison still pins every join, the
-    null-group drop, the decimal-exact average, and the mode
-    tie-break on real-world data. Fixed paths, independent of sf_dir
-    (like the binary-ingest fixture)."""
+def ref_pipeline_genre_kpis(spark: SparkSession, data_dir: str) -> DataFrame:
+    """The reference's full compute_kpis genre branch (extract →
+    enrich joins → fused mode+agg) over a data dir in the reference's
+    layout: ``streams/streams{1,2,3}.csv`` read as one multi-path scan
+    plus ``users/users.csv``. The songs dim derives deterministically
+    from each track_id — the same synthesis as
+    :func:`ref_pipeline_oracle_sql`, so the comparison pins every join,
+    the null-group drop, the decimal-exact average, and the mode
+    tie-break."""
     from ..schemas import USERS
     from ..sources.io import scan_csv_multi
     from .kpis import compute_kpis
     from .pipeline import extract_streams
 
-    users = scan_csv_multi(spark, f"{REF_DATA_DIR}/users/users.csv", USERS)
+    users = scan_csv_multi(spark, f"{data_dir}/users/users.csv", USERS)
     streams = extract_streams(
         spark,
-        [f"{REF_DATA_DIR}/streams/streams{i}.csv" for i in (1, 2, 3)],
+        [f"{data_dir}/streams/streams{i}.csv" for i in (1, 2, 3)],
     )
     songs = (
         streams.select("track_id")
@@ -910,15 +913,27 @@ def q_ref_pipeline_genre_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.genre_kpis
 
 
-ORACLE_REF_PIPELINE = f"""
+def q_ref_pipeline_genre_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`ref_pipeline_genre_kpis` on the committed sample
+    (``REF_SAMPLE_DIR``), independent of sf_dir. The sample is shaped
+    for the branch's edges: stream user ids with no users row (the
+    LEFT JOIN), 8 (genre, date) groups, modal-count ties, three files.
+    The same check on the reference's real data runs in
+    tests/test_reference_data_compat.py wherever that data exists."""
+    return ref_pipeline_genre_kpis(spark, REF_SAMPLE_DIR)
+
+
+def ref_pipeline_oracle_sql(data_dir: str) -> str:
+    """DuckDB twin of :func:`ref_pipeline_genre_kpis` over ``data_dir``."""
+    return f"""
 WITH streams AS (
   SELECT user_id, track_id, listen_time
-  FROM read_csv('{REF_DATA_DIR}/streams/streams*.csv', header=true,
+  FROM read_csv('{data_dir}/streams/streams*.csv', header=true,
                 columns={{'user_id': 'BIGINT', 'track_id': 'VARCHAR',
                           'listen_time': 'TIMESTAMP'}})
 ),
 users AS (
-  SELECT user_id FROM read_csv('{REF_DATA_DIR}/users/users.csv', header=true)
+  SELECT user_id FROM read_csv('{data_dir}/users/users.csv', header=true)
 ),
 songs AS (
   SELECT track_id,
@@ -959,6 +974,9 @@ SELECT a.track_genre, a.date, a.listen_count, a.avg_track_duration,
 FROM agg a
 LEFT JOIN (SELECT * FROM md WHERE rn = 1) m USING (track_genre, date)
 """
+
+
+ORACLE_REF_PIPELINE = ref_pipeline_oracle_sql(REF_SAMPLE_DIR)
 
 
 def q_scan_parquet_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -248,8 +248,8 @@ _R8_WINDOW_1000X = {
 # Sixth sweep: the predicted ROUND-9 re-verify window (oldest-evidence
 # positions ~101-150 of the rotation — r3/r4-era keys) probed at 1000×
 # two rounds early, same pre-driver pattern. Deliberate skips, with
-# rationale: ref_pipeline_genre_kpis (fixed real-data CSV inputs,
-# independent of sf_dir — it pins real-data parity, not scale);
+# rationale: ref_pipeline_genre_kpis (fixed in-repo sample CSV inputs,
+# independent of sf_dir — it pins pipeline parity, not scale);
 # dedup_clusters / dedup_clusters_twophase / dedup_canonical /
 # training_corpus (all compose dedup_minhash's banded self-join, whose
 # 1000× shuffle exceeds this box's free local disk — the recorded
@@ -327,9 +327,10 @@ _R9_WINDOW_1000X = {
 # Seventh sweep (round 8): the predicted ROUND-10 re-verify window
 # (rotation positions ~101-150) probed at 1000× two rounds early —
 # the standing pre-driver pattern. Deliberate skips, with rationale:
-# scan_binary_ingest / scan_xml_roundtrip / scan_orc_roundtrip are
-# serializer-roundtrip keys (the probe would time the XML/ORC/binary
-# WRITER on 60M rows, not the plan — their plans are plain scans);
+# scan_binary_ingest reads the fixed in-repo sample CSVs (no scale
+# axis); scan_xml_roundtrip / scan_orc_roundtrip are serializer-
+# roundtrip keys (the probe would time the XML/ORC WRITER on 60M rows,
+# not the plan — their plans are plain scans);
 # tpch_q2_min_cost_supplier scales on the part/supplier DIMENSIONS,
 # which no corpus multiplier models (facts are the growth axis
 # everywhere else); scd2_user_state / salted_skew_count /

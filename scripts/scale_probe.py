@@ -830,8 +830,8 @@ def main() -> None:
         "profile_table": (q_profile_table, materialize_customer, base_cust),
         "k_anonymity": (q_k_anonymity, materialize_customer, base_cust),
         # --- remaining window keys + funnel median fix evidence ---
-        # (ref_pipeline_genre_kpis is fixed reference CSVs — no scale
-        # axis, intentionally unprobed)
+        # (ref_pipeline_genre_kpis reads fixed in-repo sample CSVs — no
+        # scale axis, intentionally unprobed)
         "bucketed_join_revenue": (
             q_bucketed_join_revenue, materialize_orders, base_orders,
         ),

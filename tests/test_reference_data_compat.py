@@ -7,17 +7,25 @@ songs.csv is absent from the reference snapshot
 track_ids present in the streams — which also exercises the
 referential edge: every stream row matches songs, so genre_kpis keeps
 all events, and totals must reconcile exactly with the raw counts.
+
+The registry key ``ref_pipeline_genre_kpis`` runs on a small committed
+sample; its DuckDB-oracle comparison on this real data lives here.
 """
 
 from __future__ import annotations
 
 import os
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from music_streaming_etl_spark.plans.kpis import compute_kpis
 from music_streaming_etl_spark.plans.pipeline import extract_streams
+from music_streaming_etl_spark.plans.testdata_queries import (
+    ref_pipeline_genre_kpis,
+    ref_pipeline_oracle_sql,
+)
 from music_streaming_etl_spark.schemas import USERS
 from music_streaming_etl_spark.sources.io import scan_csv_multi
 
@@ -75,3 +83,22 @@ def test_reference_single_date(spark, ref_frames):
         streams.select(F.to_date("listen_time").alias("d")).distinct().collect()
     )
     assert [str(r["d"]) for r in dates] == ["2024-06-25"]
+
+
+def test_reference_genre_kpis_match_oracle(spark):
+    """The registry key's Spark plan and its DuckDB oracle, on the real
+    34k streams / 50k users: cell-exact equal rows."""
+    cols = [
+        "track_genre",
+        "date",
+        "listen_count",
+        "avg_track_duration",
+        "most_popular_track",
+    ]
+    got = ref_pipeline_genre_kpis(spark, REF_DATA).select(*cols).collect()
+    got = sorted(tuple(r) for r in got)
+    sql = f"SELECT {', '.join(cols)} FROM ({ref_pipeline_oracle_sql(REF_DATA)})"
+    with duckdb.connect() as con:
+        want = sorted(con.execute(sql).fetchall())
+    assert got, "the real data yields genre rows"
+    assert got == want

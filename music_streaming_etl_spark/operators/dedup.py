@@ -1321,67 +1321,6 @@ def duplicate_span_stats(
     )
 
 
-def benchmark_decontamination(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    span_n: int = 5,
-    eval_mod: int = 20,
-) -> DataFrame:
-    """Train/eval n-gram decontamination — the pre-training gate that
-    keeps benchmark text out of the training corpus (the GPT-3 paper's
-    13-gram collision scrub and Llama's n-gram overlap check are the
-    single-node twins). A deterministic slice of the corpus
-    (``id % eval_mod == 0``) stands in for the held-out benchmark
-    suite; every TRAINING document reports how many of its distinct
-    ``span_n``-token spans also occur anywhere in the eval slice:
-
-        (id, n_spans, n_eval_hits, contamination_fraction)
-
-    A training doc with ``n_eval_hits > 0`` quotes benchmark text and
-    must be dropped or scrubbed before the corpus is fed to training —
-    downstream eval numbers are meaningless otherwise.
-
-    Plan shape (all codegen, no lambdas): ``shingle_frame`` gives
-    distinct (id, span) rows in one pass; the eval slice's span SET is
-    one hash-agg distinct; a span-key equi-join flags each training
-    span; one hash-agg back to per-doc counts. Linear in total span
-    count — never an all-pairs stage, the ``duplicate_span_stats``
-    class. At 100 TB the realistic eval side is a FIXED benchmark
-    suite (MBs, not corpus-proportional) and AQE demotes the span join
-    to broadcast on its own; with a corpus-proportional eval slice
-    like this harness's 5% the join stays key-partitioned, which is
-    the correct shape — a TB-scale span set must shuffle, not
-    broadcast. Docs with fewer than ``span_n`` tokens have no spans
-    and are absent from the output (the ``duplicate_span_stats``
-    convention); a NULL id is excluded from BOTH slices by three-
-    valued logic in both engines.
-
-    Determinism: counts are exact bigints; the emitted fraction is one
-    quotient of those bigints (raw-final playbook).
-    """
-    sh = shingle_frame(df, id_col, text_col, shingle_n=span_n)
-    eval_spans = (
-        sh.filter((F.col("id") % eval_mod) == 0).select("sh").distinct()
-    )
-    train = sh.filter((F.col("id") % eval_mod) != 0)
-    flagged = train.join(
-        eval_spans.withColumn("__hit", F.lit(1)), "sh", "left"
-    ).select("id", F.coalesce(F.col("__hit"), F.lit(0)).alias("__hit"))
-    return (
-        flagged.groupBy(F.col("id").alias(id_col))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_spans"),
-            F.sum("__hit").cast("bigint").alias("n_eval_hits"),
-        )
-        .withColumn(
-            "contamination_fraction",
-            F.col("n_eval_hits").cast("double")
-            / F.col("n_spans").cast("double"),
-        )
-    )
-
-
 def lsh_candidate_quality(
     df: DataFrame,
     id_col: str,

@@ -7,9 +7,10 @@ extracted frames (``:124-169, 214-242``), raising on violation.
 
 Here each check is a *single aggregation action* on the DataFrame —
 one distributed pass, no collect of data rows, only the 1-row report
-crosses to the driver. ``validate()`` composes any number of checks
-into ONE jobs-worth of aggregates so a full validation suite costs a
-single scan even on 100 TB inputs.
+crosses to the driver. A suite of N checks is therefore N actions;
+``validate()`` runs nothing itself, it combines the results of checks
+that have already run and raises on any failure.
+``observed_quality_metrics`` is the zero-extra-pass alternative.
 """
 
 from __future__ import annotations

@@ -112,8 +112,9 @@ def run_pipeline(
     ]
     validate(output_checks, raise_on_fail=raise_on_fail)
 
-    genre_rows = genre.count()
-    hourly_rows = hourly.count()
+    # the nonempty checks already counted both frames
+    genre_rows = output_checks[0].details["total_rows"]
+    hourly_rows = output_checks[1].details["total_rows"]
     if genre_out:
         sink_csv(genre_kpis_for_load(genre), genre_out, single_file=True)
     if hourly_out:

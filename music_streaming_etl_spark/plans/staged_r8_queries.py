@@ -1,5 +1,6 @@
-"""Round-8 STAGED registry surface — built, oracle-twinned, and
-pytest-verified in round 7, but NOT wired into ``registry.py``.
+"""Round-8 registry surface — built, oracle-twinned, and
+pytest-verified in round 7, registered in round 8 (``registry.py``
+merges ``REGISTRY_STAGED_R8``).
 
 VERDICT r6 item 7 keeps the registry-freeze discipline: new surface
 is pre-staged one round ahead (evidence banked: cell-exact oracle
@@ -619,11 +620,6 @@ LIMIT 1
 """
 
 
-# Round-8 registration payload — NOT imported by registry.py this
-# round (the freeze). Registration is:
-#   from .staged_r8_queries import REGISTRY_STAGED_R8
-#   REGISTRY.update(REGISTRY_STAGED_R8)
-# plus fronting the three keys in _PRIORITY (new-code-first rule).
 REGISTRY_STAGED_R8: dict = {
     "kruskal_wallis": (q_kruskal_wallis, ORACLE_KRUSKAL_WALLIS),
     "brown_forsythe": (q_brown_forsythe, ORACLE_BROWN_FORSYTHE),

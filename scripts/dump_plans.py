@@ -1,6 +1,13 @@
-"""Regenerate PLANS.md: formatted physical plans for the key queries.
+"""Dump `.explain("formatted")` physical plans for registry keys.
 
-Usage: python scripts/dump_plans.py > PLANS.md
+Usage:
+  python scripts/dump_plans.py > PLANS.md
+      PLANS.md: the annotated key queries at sf0.01, local[8].
+  python scripts/dump_plans.py <out_dir> <suffix> [key ...]
+      Writes <out_dir>/<key>_<suffix>.txt for each key (default: the
+      bench HEADLINE list) at $SPARK_GRAFT_SF_DIR (default sf0.1) under
+      the bench's session config, so the files match what the bench
+      executes. Used for before/after plan evidence (plans/r09, r10).
 """
 
 from __future__ import annotations
@@ -197,7 +204,33 @@ COMMENT = {
 }
 
 
-def main() -> None:
+def explain(spark, name: str, sf_dir: str) -> str:
+    """The formatted plan text of one registry key's DataFrame."""
+    fn, _ = REGISTRY[name]
+    df = fn(spark, sf_dir)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def dump_files(out_dir: str, suffix: str, names: list[str]) -> None:
+    from bench import HEADLINE
+
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_SF_DIR", os.path.join(os.path.dirname(SF), "sf0.1")
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("dump-plans")
+    for name in names or HEADLINE:
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(explain(spark, name, sf_dir))
+        print(f"wrote {path}")
+        spark.catalog.clearCache()
+
+
+def dump_plans_md() -> None:
     spark = get_spark("plans", master="local[8]", shuffle_partitions=8)
     print("# PLANS — formatted physical plans for the key queries\n")
     print("Generated by `python scripts/dump_plans.py` (sf0.01, local[8]).")
@@ -206,17 +239,22 @@ def main() -> None:
     print("partial/final `HashAggregate`, and the absence of unnecessary")
     print("`Exchange` nodes.\n")
     for name in COMMENT:
-        fn, _ = REGISTRY[name]
-        df = fn(spark, SF)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        tree = buf.getvalue().split("\n\n")[0]
+        tree = explain(spark, name, SF).split("\n\n")[0]
         print(f"## {name}\n")
         print(COMMENT[name])
         print("\n```")
         print(tree.strip())
         print("```\n")
+
+
+def main() -> None:
+    args = sys.argv[1:]
+    if not args:
+        dump_plans_md()
+    elif len(args) >= 2:
+        dump_files(args[0], args[1], args[2:])
+    else:
+        sys.exit(__doc__)
 
 
 if __name__ == "__main__":

@@ -11,7 +11,7 @@ coexist.
 
 Usage: python scripts/probe_1000x.py [sf_dir] [mult] [op ...]
   ops default to every PROBES key: the two the r5 sweep left at 100×
-  for disk reasons (tpch_q1_piped / item_jaccard) plus the round-7
+  for disk reasons (tpch_q1_piped / item_jaccard) plus the round-7/8
   staged keys. Ops sharing a corpus prefix reuse one materialization
   — the corpus is deleted only after its LAST user (still never
   coexisting with a different prefix's corpus). One JSON line to
@@ -48,18 +48,10 @@ from music_streaming_etl_spark.plans.staged_queries import (  # noqa: E402
     q_merge_upsert_kpis,
     q_similarity_topk_ivf_full_probe,
 )
-from music_streaming_etl_spark.plans.staged_r9_queries import (  # noqa: E402
-    q_benchmark_decontamination,
-    q_cochrans_q,
-    q_cramers_v,
-    q_durbin_watson,
-    q_friedman_test,
-    q_jonckheere_terpstra,
-    q_ks_two_sample,
-    q_mood_median_test,
-    q_page_trend_test,
-    q_runs_test,
-    q_wilcoxon_signed_rank,
+from music_streaming_etl_spark.plans.staged_r8_queries import (  # noqa: E402
+    q_brown_forsythe,
+    q_changepoint_mean_shift,
+    q_kruskal_wallis,
 )
 from music_streaming_etl_spark.plans.stats_queries import (  # noqa: E402
     q_tpch_q1_piped,
@@ -85,64 +77,13 @@ PROBES = {
     "similarity_topk_ivf_full_probe": (
         q_similarity_topk_ivf_full_probe, materialize_llm, "llm", "embeddings",
     ),
+    # round-8 staged keys, same discipline
+    "kruskal_wallis": (q_kruskal_wallis, materialize_orders, "ord", "orders"),
+    "changepoint_mean_shift": (
+        q_changepoint_mean_shift, materialize_orders, "ord", "orders",
+    ),
+    "brown_forsythe": (q_brown_forsythe, materialize_star, "star", "lineitem"),
 }
-
-# round-8 staged keys (plans/staged_r8_queries.py) — same
-# pre-registration decade-past-the-curve discipline
-from music_streaming_etl_spark.plans.staged_r8_queries import (  # noqa: E402
-    q_brown_forsythe,
-    q_changepoint_mean_shift,
-    q_kruskal_wallis,
-)
-
-PROBES.update(
-    {
-        "kruskal_wallis": (
-            q_kruskal_wallis, materialize_orders, "ord", "orders",
-        ),
-        "changepoint_mean_shift": (
-            q_changepoint_mean_shift, materialize_orders, "ord", "orders",
-        ),
-        "brown_forsythe": (
-            q_brown_forsythe, materialize_star, "star", "lineitem",
-        ),
-        # round-9 staged keys (plans/staged_r9_queries.py) — same
-        # pre-registration decade-past-the-curve discipline
-        "ks_two_sample": (
-            q_ks_two_sample, materialize_orders, "ord", "orders",
-        ),
-        "jonckheere_terpstra": (
-            q_jonckheere_terpstra, materialize_orders, "ord", "orders",
-        ),
-        "mood_median_test": (
-            q_mood_median_test, materialize_star, "star", "lineitem",
-        ),
-        "cramers_v": (
-            q_cramers_v, materialize_events, "ev", "events",
-        ),
-        "wilcoxon_signed_rank": (
-            q_wilcoxon_signed_rank, materialize_orders, "ord", "orders",
-        ),
-        "benchmark_decontamination": (
-            q_benchmark_decontamination, materialize_llm, "llm", "documents",
-        ),
-        "friedman_test": (
-            q_friedman_test, materialize_orders, "ord", "orders",
-        ),
-        "cochrans_q": (
-            q_cochrans_q, materialize_events, "ev", "events",
-        ),
-        "page_trend_test": (
-            q_page_trend_test, materialize_orders, "ord", "orders",
-        ),
-        "runs_test": (
-            q_runs_test, materialize_orders, "ord", "orders",
-        ),
-        "durbin_watson": (
-            q_durbin_watson, materialize_orders, "ord", "orders",
-        ),
-    }
-)
 
 # Fourth sweep: the predicted ROUND-7 re-verify window (the 35 oldest-
 # evidence r1-era keys at positions 16-50) probed at 1000× before the

@@ -1029,55 +1029,17 @@ def main() -> None:
         # so registry B rebuilds consistently at every multiple)
         "record_linkage_scores": "customer",
         "linkage_pattern_counts": "customer",
-    }
-    for _k, _mn in _REGISTRY_PROBES.items():
-        _m, _b = _MATS[_mn]
-        probes.setdefault(_k, (_REG[_k][0], _m, _b))
-    # round-7 STAGED keys (plans/staged_queries.py, not yet in the
-    # live registry): probed with the same machinery so registration
-    # lands with scale curves already on file.
-    from music_streaming_etl_spark.plans.staged_queries import (
-        REGISTRY_STAGED as _STAGED,
-    )
-
-    _STAGED_PROBES = {
+        # upserts / statistics registered from the staged modules
         "merge_into_customers": "orders",
         "merge_upsert_kpis": "orders",
         "similarity_topk_ivf_full_probe": "llm_emb",
-    }
-    for _k, _mn in _STAGED_PROBES.items():
-        _m, _b = _MATS[_mn]
-        probes.setdefault(_k, (_STAGED[_k][0], _m, _b))
-    # round-8 STAGED keys (plans/staged_r8_queries.py): same
-    # pre-registration probing discipline.
-    from music_streaming_etl_spark.plans.staged_r8_queries import (
-        REGISTRY_STAGED_R8 as _STAGED_R8,
-    )
-
-    _STAGED_R8_PROBES = {
         "kruskal_wallis": "orders",
         "changepoint_mean_shift": "orders",
         "brown_forsythe": "star",
     }
-    for _k, _mn in _STAGED_R8_PROBES.items():
+    for _k, _mn in _REGISTRY_PROBES.items():
         _m, _b = _MATS[_mn]
-        probes.setdefault(_k, (_STAGED_R8[_k][0], _m, _b))
-    # round-9 STAGED keys (plans/staged_r9_queries.py): same
-    # pre-registration probing discipline.
-    from music_streaming_etl_spark.plans.staged_r9_queries import (
-        REGISTRY_STAGED_R9 as _STAGED_R9,
-    )
-
-    _STAGED_R9_PROBES = {
-        "ks_two_sample": "orders",
-        "jonckheere_terpstra": "orders",
-        "mood_median_test": "star",
-        "cramers_v": "events",
-        "wilcoxon_signed_rank": "orders",
-    }
-    for _k, _mn in _STAGED_R9_PROBES.items():
-        _m, _b = _MATS[_mn]
-        probes.setdefault(_k, (_STAGED_R9[_k][0], _m, _b))
+        probes.setdefault(_k, (_REG[_k][0], _m, _b))
     # posting-list pair ops: fan-out is Σ|doc|² — the df-cap is the
     # documented scale knob, so the uncapped probe stops at 10×
     # (r4: token_pmi's registered form is now rarest-K-capped with a

@@ -71,20 +71,48 @@ def test_pipeline_end_to_end(spark, dims, tmp_path):
     }
 
 
+def _assert_aborts_before_sink(spark, tmp_path, streams, songs, users, check):
+    """A failing check raises before either sink path is created."""
+    genre_out = tmp_path / "genre"
+    hourly_out = tmp_path / "hourly"
+    with pytest.raises(ValidationError, match=check):
+        run_pipeline(
+            spark, streams, songs, users,
+            genre_out=str(genre_out), hourly_out=str(hourly_out),
+        )
+    assert not genre_out.exists()
+    assert not hourly_out.exists()
+
+
 def test_pipeline_aborts_on_null_keys(spark, dims, tmp_path):
     songs, users = dims
     streams = spark.createDataFrame(
         [(1, None, dt.datetime(2024, 6, 25, 1))],
         "user_id int, track_id string, listen_time timestamp",
     )
-    with pytest.raises(ValidationError, match="streams_no_nulls"):
-        run_pipeline(spark, streams, songs, users)
+    _assert_aborts_before_sink(
+        spark, tmp_path, streams, songs, users, "streams_no_nulls"
+    )
 
 
-def test_pipeline_aborts_on_empty(spark, dims):
+def test_pipeline_aborts_on_empty(spark, dims, tmp_path):
     songs, users = dims
     empty = spark.createDataFrame(
         [], "user_id int, track_id string, listen_time timestamp"
     )
-    with pytest.raises(ValidationError, match="streams_nonempty"):
-        run_pipeline(spark, empty, songs, users)
+    _assert_aborts_before_sink(
+        spark, tmp_path, empty, songs, users, "streams_nonempty"
+    )
+
+
+def test_pipeline_aborts_on_empty_genre_kpis(spark, dims, tmp_path):
+    """Inputs pass, but no stream track_id is in the songs dim: the
+    genre output check fails and neither sink is written."""
+    songs, users = dims
+    streams = spark.createDataFrame(
+        [(1, "unknown", dt.datetime(2024, 6, 25, 1))],
+        "user_id int, track_id string, listen_time timestamp",
+    )
+    _assert_aborts_before_sink(
+        spark, tmp_path, streams, songs, users, "genre_kpis_nonempty"
+    )

@@ -23,6 +23,26 @@ def test_every_query_documented_and_typed():
             assert isinstance(oracle, str) and "SELECT" in oracle.upper(), name
 
 
+def test_no_staged_registry_outside_registry():
+    """Every module-level ``REGISTRY*`` dict in the plans package is
+    merged into REGISTRY: a staged key set that no entry point serves
+    fails here instead of accumulating."""
+    import importlib
+    import pkgutil
+
+    from music_streaming_etl_spark import plans
+
+    unserved = {}
+    for mod in pkgutil.iter_modules(plans.__path__):
+        module = importlib.import_module(f"{plans.__name__}.{mod.name}")
+        for attr, value in vars(module).items():
+            if attr.startswith("REGISTRY") and isinstance(value, dict):
+                missing = sorted(set(value) - set(REGISTRY))
+                if missing:
+                    unserved[f"{mod.name}.{attr}"] = missing
+    assert not unserved, unserved
+
+
 def test_readme_mentions_every_registry_key():
     text = open(README).read()
     missing = [name for name in REGISTRY if f"`{name}`" not in text]

@@ -44,7 +44,8 @@ lineitem⋈orders join key, say), the fan-out exchange IS that shuffle
 and Catalyst reuses it outright (guide §2.4).
 
 ``_effective_splits`` reads only parquet FOOTERS (driver-side
-metadata, microseconds per file, memoized per path like Spark's own
+metadata, microseconds per file, memoized under the table's layout
+stamp by ``sources/io.py::table_layout``, like Spark's own
 file-listing cache — ``spark.sql.hive.filesourcePartitionFileCacheSize``).
 No data is read, nothing is persisted, and every bench/oracle run
 still computes from the parquet inputs alone. When a directory
@@ -54,79 +55,28 @@ file count without opening a single footer.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: (path, parallelism, layout stamp) -> effective split count.
-#: Metadata memo (file layout, never query results); process-local,
-#: exactly the lifetime Spark gives its own file-status cache. The
-#: layout stamp (file count + total size + max mtime, r10 per ADVICE
-#: r9) invalidates the memo when a table is rewritten in-process —
-#: e.g. testdata regenerated at a different layout mid-session —
-#: instead of serving a stale split count.
-_SPLITS_CACHE: dict[tuple, int] = {}
-
-
-def _list_parquet_files(path: str) -> list[str]:
-    """Parquet data files under ``path``. Top-level ``*.parquet``
-    entries when present; otherwise recurse (r10 per ADVICE r9) so a
-    Hive-partitioned/nested layout reports its true file count rather
-    than 0 — which would have added a full-table exchange to layouts
-    that may already be well-split."""
-    if not os.path.isdir(path):
-        return [path]
-    top = [
-        os.path.join(path, f)
-        for f in sorted(os.listdir(path))
-        if f.endswith(".parquet")
-    ]
-    if top:
-        return top
-    nested = []
-    for root, _dirs, names in os.walk(path):
-        nested.extend(
-            os.path.join(root, f) for f in names if f.endswith(".parquet")
-        )
-    return sorted(nested)
+from ..sources.io import layout_row_groups, table_layout
 
 
 def _effective_splits(path: str, parallelism: int) -> int:
     """Upper bound on scan parallelism for a parquet file/directory:
-    total row groups (a split never cuts inside a row group). Bounded
-    work: short-circuits at ``parallelism`` without reading further
-    footers, and a >=``parallelism``-file directory never opens any."""
+    its file count when that already reaches ``parallelism`` (no footer
+    is opened), else its total row groups (a split never cuts inside a
+    row group), memoized under the table's layout stamp."""
     try:
-        files = _list_parquet_files(path)
-        if not files:
-            # no parquet data found where the caller said a table
-            # lives: treat like the unreadable-metadata path — assume
-            # well-split and leave the plan alone (ADVICE r9: the
-            # operator's no-op guarantee outranks a speculative
-            # exchange)
+        layout = table_layout(path)
+        if layout is None:
+            # not listable locally, or no parquet data where the caller
+            # said a table lives: assume well-split and leave the plan
+            # alone (ADVICE r9: the operator's no-op guarantee outranks
+            # a speculative exchange)
             return parallelism
-        stamp = (
-            len(files),
-            sum(os.path.getsize(f) for f in files),
-            max(os.path.getmtime(f) for f in files),
-        )
-        key = (path, parallelism, stamp)
-        cached = _SPLITS_CACHE.get(key)
-        if cached is not None:
-            return cached
-        if len(files) >= parallelism:
-            splits = len(files)
-        else:
-            import pyarrow.parquet as pq
-
-            splits = 0
-            for f in files:
-                splits += pq.ParquetFile(f).metadata.num_row_groups
-                if splits >= parallelism:
-                    break
-        _SPLITS_CACHE[key] = splits
-        return splits
+        if len(layout.files) >= parallelism:
+            return len(layout.files)
+        return layout_row_groups(layout)
     except Exception:  # noqa: BLE001 — metadata unreadable: assume
         return parallelism  # well-split and leave the plan alone
 

@@ -21,12 +21,7 @@ from ..operators.ranking import global_topk
 from ..operators.sampling import weighted_sample_topk
 from ..operators.skyline import skyline_2d
 from ..operators.text import sparse_cosine_pairs
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .testdata_queries import _t as base_t
-
-    return base_t(spark, sf_dir, name)
+from .testdata_queries import _t
 
 
 # --------------------------------------------------------------------------

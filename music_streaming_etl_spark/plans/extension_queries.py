@@ -34,6 +34,7 @@ from ..operators.text import (
     quality_score,
     stopword_ratio,
 )
+from .testdata_queries import _t
 
 # Shared DuckDB fragments -------------------------------------------------
 
@@ -47,12 +48,6 @@ SQL_SHINGLES3 = (
     f"ELSE [] END"
 )
 SQL_NORMTEXT = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .testdata_queries import _t as base_t
-
-    return base_t(spark, sf_dir, name)
 
 
 # --------------------------------------------------------------------------

@@ -121,7 +121,7 @@ def _local_imports(fn, sources: dict[str, str], seen: set[int]) -> None:
         except Exception:  # noqa: BLE001 — unresolvable: skip
             continue
         for alias in node.names:
-            obj = getattr(mod, alias.name, None)
+            obj = _unwrap(getattr(mod, alias.name, None))
             if obj is None:
                 continue
             if isinstance(obj, types.FunctionType) and _is_in_package(obj):
@@ -156,6 +156,14 @@ def _const_repr(obj) -> str:
     dict of decoder functions) carry a per-process memory address,
     which is not source: it is dropped."""
     return re.sub(r" at 0x[0-9a-fA-F]+", "", repr(obj))
+
+
+def _unwrap(obj):
+    """A decorated function (a ``functools.lru_cache`` memo) stands for
+    the function it wraps: its code is closure, while the values it
+    has cached at runtime are not."""
+    wrapped = getattr(obj, "__wrapped__", None)
+    return wrapped if isinstance(wrapped, types.FunctionType) else obj
 
 
 def _is_in_package(obj) -> bool:
@@ -195,7 +203,7 @@ def _closure_sources(fn, sources: dict[str, str], seen: set[int]) -> None:
     _local_imports(fn, sources, seen)
     globs = getattr(fn, "__globals__", {})
     for name in sorted(_code_names(code)):
-        obj = globs.get(name)
+        obj = _unwrap(globs.get(name))
         if obj is None:
             continue
         if isinstance(obj, types.ModuleType):

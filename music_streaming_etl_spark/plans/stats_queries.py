@@ -37,14 +37,9 @@ from pyspark.sql import functions as F
 
 from ..functions.quantize import q6, q6_sql
 from ..operators.stats import rank_sum_stats
+from .testdata_queries import _t
 
 REGISTRY_STATS: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .testdata_queries import _t as base_t
-
-    return base_t(spark, sf_dir, name)
 
 
 _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"

@@ -41,43 +41,12 @@ from ..operators.aggregates import (
     drop_null_group_keys,
     topk_by_freq_ranked,
 )
+from ..operators.fanout import fan_out_scan
 from ..operators.joins import anti_join_orphans, left_join_equi
 from ..operators.ranking import global_topk
+from ..sources.io import read_parquet_table
 
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
-
-
-#: (applicationId, path, mtime, size) -> inferred StructType. Schema
-#: metadata memo (r10, guide §4 driver boundary): plain
-#: ``read.parquet()`` re-infers the schema from footers on EVERY call
-#: — measured ~115 ms/table at sf0.1, paid per table per query
-#: construction INSIDE the bench's timed region (tpch_q5 touches 6
-#: tables = ~0.6 s/invocation of pure re-inference). Supplying the
-#: previously-inferred schema skips inference (~23 ms) and produces
-#: the IDENTICAL DataFrame — the memoized schema IS the inferred one.
-#: The layout stamp invalidates on rewrite, same discipline as
-#: operators/fanout.py::_SPLITS_CACHE; only schema + stamp are stored,
-#: never rows, so every action still computes from the parquet inputs.
-_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
-
-
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        st = os.stat(path)
-        key = (
-            spark.sparkContext.applicationId,
-            path,
-            st.st_mtime,
-            st.st_size,
-        )
-    except OSError:  # non-local / unstatable: plain inference read
-        return spark.read.parquet(path)
-    hit = _SCHEMA_CACHE.get(key)
-    if hit is not None:
-        return spark.read.schema(hit).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMA_CACHE[key] = df.schema
-    return df
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -88,7 +57,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         return _events(spark, sf_dir)
-    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    return read_parquet_table(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _tf(
@@ -104,8 +73,6 @@ def _tf(
     rationale and measurements. Pick ``cols`` = the table's high-
     cardinality key, ideally the first downstream shuffle key so the
     fan-out exchange is REUSED instead of added (guide §2.4)."""
-    from ..operators.fanout import fan_out_scan
-
     return fan_out_scan(
         _t(spark, sf_dir, name), spark, f"{sf_dir}/{name}.parquet", *cols
     )
@@ -121,10 +88,9 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay fully distributed — no driver materialization — so they
     scale like any parquet scan."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # schema-memoized like every _t table (the memo key is stamped
-    # AFTER the conf above is set, so the cached schema always
-    # reflects the nanosAsLong read path)
-    raw = _read_parquet(spark, f"{sf_dir}/events.parquet")
+    # schema-memoized like every _t table; inferred only after the
+    # conf above is set, so the memo holds the nanosAsLong read path's
+    raw = read_parquet_table(spark, f"{sf_dir}/events.parquet")
     ts_type = raw.schema["ts"].dataType.simpleString()
     if ts_type == "bigint":  # TIMESTAMP(NANOS) read as raw int64 nanos
         return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -876,7 +842,8 @@ def ref_pipeline_genre_kpis(spark: SparkSession, data_dir: str) -> DataFrame:
     enrich joins → fused mode+agg) over a data dir in the reference's
     layout: ``streams/streams{1,2,3}.csv`` read as one multi-path scan
     plus ``users/users.csv``. The songs dim derives deterministically
-    from each track_id — the same synthesis as
+    from each track_id (the duration from two of its characters, so
+    tracks of one genre differ) — the same synthesis as
     :func:`ref_pipeline_oracle_sql`, so the comparison pins every join,
     the null-group drop, the decimal-exact average, and the mode
     tie-break."""
@@ -904,9 +871,10 @@ def ref_pipeline_genre_kpis(spark: SparkSession, data_dir: str) -> DataFrame:
             F.concat(F.lit("genre_"), F.substring("track_id", 1, 1)).alias(
                 "track_genre"
             ),
-            (F.ascii(F.substring("track_id", 1, 1)) * 3000).alias(
-                "duration_ms"
-            ),
+            (
+                F.ascii(F.substring("track_id", 1, 1)) * 3000
+                + F.ascii(F.substring("track_id", 5, 1))
+            ).alias("duration_ms"),
         )
     )
     res = compute_kpis(streams, songs, users, cache=False)
@@ -939,7 +907,8 @@ songs AS (
   SELECT track_id,
          'track_' || substr(track_id, 1, 4) AS track_name,
          'genre_' || substr(track_id, 1, 1) AS track_genre,
-         ascii(substr(track_id, 1, 1)) * 3000 AS duration_ms
+         ascii(substr(track_id, 1, 1)) * 3000
+           + ascii(substr(track_id, 5, 1)) AS duration_ms
   FROM (SELECT DISTINCT track_id FROM streams)
 ),
 merged AS (

@@ -84,30 +84,3 @@ HOURLY_KPIS = T.StructType(
         T.StructField("track_diversity_index", T.DoubleType(), True),
     ]
 )
-
-# --------------------------------------------------------------------------
-# Driver testdata tables (/root/testdata/sf*/ — TESTDATA.md)
-# --------------------------------------------------------------------------
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_table(spark, sf_dir: str, name: str):
-    """Read one driver-generated parquet table (schema from footer —
-    parquet carries its own types, so no inference happens)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark, sf_dir: str) -> dict:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}

@@ -20,7 +20,10 @@ when a driver jar is present.
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,10 +77,93 @@ def sink_csv(
     w.csv(path)
 
 
-def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """S3-analog — columnar scan; Catalyst pushes filters/projections
-    into the footer-driven reader (check PushedFilters in explain)."""
-    return spark.read.parquet(path)
+class TableLayout(NamedTuple):
+    """A local parquet table's data files, stamped by one rule: file
+    count, total bytes and newest mtime over every data file. A rewrite
+    of any part file changes the stamp, in place or not, so the tuple
+    itself keys the footer memo."""
+
+    path: str
+    files: tuple[str, ...]
+    total_bytes: int
+    max_mtime_ns: int
+
+
+def table_layout(path: str) -> TableLayout | None:
+    """The data files of the parquet table at ``path``: its top-level
+    ``*.parquet`` entries, or, when there are none, every ``*.parquet``
+    below it (a Hive-partitioned or nested layout). ``None`` when the
+    path cannot be listed locally (a remote scheme, a missing path) or
+    holds no data file; callers then do a plain read or assume the
+    table is well split."""
+    try:
+        if os.path.isdir(path):
+            files = sorted(
+                os.path.join(path, f)
+                for f in os.listdir(path)
+                if f.endswith(".parquet")
+            ) or sorted(
+                os.path.join(root, f)
+                for root, _dirs, names in os.walk(path)
+                for f in names
+                if f.endswith(".parquet")
+            )
+        else:
+            files = [path]
+        stats = [os.stat(f) for f in files]
+    except OSError:
+        return None
+    if not files:
+        return None
+    return TableLayout(
+        path,
+        tuple(files),
+        sum(st.st_size for st in stats),
+        max(st.st_mtime_ns for st in stats),
+    )
+
+
+@functools.lru_cache(maxsize=256)
+def _footer_memo(layout: TableLayout, app_id: str | None) -> dict:
+    """The memo of one stamped layout: the returned dict itself, which
+    callers fill with footer facts once and read until the stamp
+    changes (a new stamp is a new key). Only metadata is kept,
+    never rows. The bound caps how many superseded stamps a long
+    session holds."""
+    return {}
+
+
+def layout_row_groups(layout: TableLayout) -> int:
+    """Total parquet row groups over ``layout``'s files, read from the
+    footers alone (a split never cuts inside a row group)."""
+    memo = _footer_memo(layout, None)
+    if "row_groups" not in memo:
+        import pyarrow.parquet as pq
+
+        memo["row_groups"] = sum(
+            pq.ParquetFile(f).metadata.num_row_groups for f in layout.files
+        )
+    return memo["row_groups"]
+
+
+def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
+    """``read.parquet`` given the schema Spark inferred for the table's
+    layout stamp in this application. Inference re-reads every footer
+    on each plain ``read.parquet()`` (about 115 ms a table at sf0.1);
+    a read given the memoized schema skips it and builds the identical
+    DataFrame. Keyed by the Spark application too: a read conf such as
+    ``nanosAsLong`` changes the inferred types, and a new application
+    may read with other confs. A table that cannot be listed locally
+    gets a plain inferring read."""
+    layout = table_layout(path)
+    if layout is None:
+        return spark.read.parquet(path)
+    memo = _footer_memo(layout, spark.sparkContext.applicationId)
+    if "schema" in memo:
+        return spark.read.schema(memo["schema"]).parquet(path)
+    df = spark.read.parquet(path)
+    memo["schema"] = df.schema
+    return df
 
 
 def sink_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -266,36 +352,6 @@ def sink_xml(
     )
 
 
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction — the table-maintenance op every
-    long-running ingest needs at scale (each streaming micro-batch /
-    upsert leaves files; thousands of small files destroy scan
-    planning and open-file throughput). Rewrites the parquet dir into
-    ⌈total_bytes / target⌉ files and returns the new file count.
-    Atomic-enough swap via a sibling temp dir, like the upsert writer.
-    """
-    import math
-    import os
-    import shutil
-
-    total = sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compact_swap"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    return sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-
-
 def ddl_recreate(
     spark: SparkSession, df: DataFrame, table: str, partition_by: Sequence[str] = ()
 ) -> None:
@@ -319,20 +375,16 @@ def optimize_table(
     right-sized files, optionally laying rows along a Morton curve
     over ``zorder_cols`` so footer min/max stats prune every listed
     column (see ``operators/layout.py``). Same atomic-enough sibling
-    swap as ``compact_small_files``; returns the new file count.
+    swap as the upsert writer; returns the new file count.
 
     At scale this is the nightly job that keeps streaming/upsert
     output scannable: without it, micro-batch files accumulate and
     multi-column predicates stop skipping."""
     import math
-    import os
     import shutil
 
-    total = sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
+    layout = table_layout(path)
+    total = layout.total_bytes if layout else 0
     n_files = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(path)
     if zorder_cols:
@@ -345,7 +397,7 @@ def optimize_table(
     df.write.mode("overwrite").parquet(tmp)
     shutil.rmtree(path)
     os.rename(tmp, path)
-    return sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
+    return len(table_layout(path).files)
 
 
 def scan_csv_permissive(

@@ -18,6 +18,9 @@ The sample is shaped by construction so the genre branch of
 - in half the groups the two lexicographically largest track names tie
   for the most plays (the mode tie-break must pick the smaller), in the
   other half the largest name wins outright (a plain ``min`` is wrong);
+- the derived duration adds the fifth track_id char to the genre's
+  base, so a group averages unequal values (every group of the
+  committed sample holds 5 or 6 distinct durations);
 - the rows are spread over three files (a real multi-path read).
 
 Usage:
@@ -39,7 +42,7 @@ OUT = os.path.join(
 )
 
 BASE62 = string.digits + string.ascii_uppercase + string.ascii_lowercase
-GENRES = "05aZ"  # first track_id char: the derived genre and duration
+GENRES = "05aZ"  # first track_id char: the derived genre
 DATES = (datetime.date(2024, 6, 25), datetime.date(2024, 6, 26))
 TIE = (2, 3, 3)  # plays per track name, names in ascending order
 CLEAR = (1, 2, 4)

@@ -15,14 +15,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from music_streaming_etl_spark.operators.fanout import (
-    _SPLITS_CACHE,
     _effective_splits,
     fan_out_scan,
 )
+from music_streaming_etl_spark.sources.io import _footer_memo, table_layout
 
 
 def test_effective_splits_single_row_group(sf_dir):
-    _SPLITS_CACHE.clear()
+    _footer_memo.cache_clear()
     n = _effective_splits(f"{sf_dir}/lineitem.parquet", 32)
     assert n == 1, "driver testdata is one row group per table"
 
@@ -32,12 +32,12 @@ def test_effective_splits_many_files_short_circuits(spark, tmp_path):
     spark.range(1000).withColumn("k", F.col("id") % 7).repartition(
         8
     ).write.mode("overwrite").parquet(out)
-    _SPLITS_CACHE.clear()
+    _footer_memo.cache_clear()
     assert _effective_splits(out, 4) >= 4, "8 files >= parallelism of 4"
 
 
 def test_fan_out_fires_on_single_split(spark, sf_dir):
-    _SPLITS_CACHE.clear()
+    _footer_memo.cache_clear()
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     fanned = fan_out_scan(
         df, spark, f"{sf_dir}/lineitem.parquet", "l_orderkey"
@@ -57,14 +57,14 @@ def test_fan_out_noop_on_well_split_input(spark, tmp_path):
     spark.range(10_000).withColumn("k", F.col("id") % 97).repartition(
         par
     ).write.mode("overwrite").parquet(out)
-    _SPLITS_CACHE.clear()
+    _footer_memo.cache_clear()
     df = spark.read.parquet(out)
     fanned = fan_out_scan(df, spark, out, "id")
     assert fanned is df, "enough splits -> identity, no added exchange"
 
 
 def test_fan_out_preserves_results(spark, sf_dir):
-    _SPLITS_CACHE.clear()
+    _footer_memo.cache_clear()
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     fanned = fan_out_scan(
         df, spark, f"{sf_dir}/lineitem.parquet", "l_orderkey"
@@ -80,7 +80,7 @@ def test_fan_out_unreadable_metadata_is_noop(spark, tmp_path):
     bogus = str(tmp_path / "nope.parquet")
     with open(bogus, "wb") as f:
         f.write(b"not parquet")
-    _SPLITS_CACHE.clear()
+    _footer_memo.cache_clear()
     df = spark.range(10)
     assert fan_out_scan(df, spark, bogus, "id") is df
 
@@ -89,13 +89,14 @@ def test_fan_out_unreadable_metadata_is_noop(spark, tmp_path):
 def test_splits_cache_is_metadata_only(sf_dir, name):
     """The memo caches file-layout metadata (like Spark's own
     file-status cache), never query results."""
-    _SPLITS_CACHE.clear()
+    _footer_memo.cache_clear()
     path = f"{sf_dir}/{name}.parquet"
     a = _effective_splits(path, 16)
-    # r10 key: (path, parallelism, layout stamp) — values are split
-    # counts (ints), never rows/results
-    keys = [k for k in _SPLITS_CACHE if k[0] == path and k[1] == 16]
-    assert len(keys) == 1 and isinstance(_SPLITS_CACHE[keys[0]], int)
+    # one memo entry, keyed by the layout stamp alone (no parallelism);
+    # its value is a row-group count (an int), never rows/results
+    assert _footer_memo.cache_info().currsize == 1
+    memo = _footer_memo(table_layout(path), None)
+    assert list(memo) == ["row_groups"] and isinstance(memo["row_groups"], int)
     assert _effective_splits(path, 16) == a
     assert isinstance(a, int)
     assert os.path.exists(path)
@@ -109,7 +110,7 @@ def test_effective_splits_recurses_nested_layout(spark, tmp_path):
     spark.range(100).withColumn("p", F.col("id") % 4).write.partitionBy(
         "p"
     ).parquet(root)
-    _SPLITS_CACHE.clear()
+    _footer_memo.cache_clear()
     n_files = sum(
         f.endswith(".parquet") for _, _, fs in os.walk(root) for f in fs
     )
@@ -126,7 +127,7 @@ def test_effective_splits_empty_dir_is_well_split(spark, tmp_path):
     alone."""
     empty = str(tmp_path / "empty_dir")
     os.makedirs(empty)
-    _SPLITS_CACHE.clear()
+    _footer_memo.cache_clear()
     df = spark.range(10)
     assert fan_out_scan(df, spark, empty, "id") is df
 
@@ -139,7 +140,7 @@ def test_splits_cache_invalidates_on_rewrite(spark, tmp_path):
 
     path = str(tmp_path / "rw")
     spark.range(1000).coalesce(1).write.mode("overwrite").parquet(path)
-    _SPLITS_CACHE.clear()
+    _footer_memo.cache_clear()
     first = _effective_splits(path, 8)
     assert first < 8  # one file, one row group
     spark.range(1000).repartition(8, SF.col("id")).write.mode(
@@ -147,3 +148,31 @@ def test_splits_cache_invalidates_on_rewrite(spark, tmp_path):
     ).parquet(path)
     second = _effective_splits(path, 8)
     assert second >= 8  # fresh stamp -> fresh count, not the memo
+
+
+def test_in_place_part_rewrite_refreshes_schema_and_splits(spark, tmp_path):
+    """A part file rewritten under its own name, with an added column
+    and more row groups, leaves the directory's own stat unchanged.
+    The ``_t`` read must still return the new column, and the split
+    count must be recomputed: the layout is stamped per data file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from music_streaming_etl_spark.plans.testdata_queries import _t
+
+    table = tmp_path / "tbl.parquet"
+    table.mkdir()
+    part = table / "part-00000.parquet"
+    ids = list(range(100))
+    pq.write_table(pa.table({"a": ids}), part)
+    assert _t(spark, str(tmp_path), "tbl").columns == ["a"]
+    assert _effective_splits(str(table), 8) == 1
+    dir_stat = os.stat(table)
+    pq.write_table(pa.table({"a": ids, "b": ids}), part, row_group_size=25)
+    # the premise: the directory's own stamp did not move
+    assert os.stat(table).st_mtime_ns == dir_stat.st_mtime_ns
+    assert os.stat(table).st_size == dir_stat.st_size
+    df = _t(spark, str(tmp_path), "tbl")
+    assert df.columns == ["a", "b"]
+    assert df.selectExpr("sum(b)").collect()[0][0] == sum(ids)
+    assert _effective_splits(str(table), 8) == 4

@@ -41,16 +41,16 @@ def test_null_value_round_trip(spark, tmp_path):
     assert rows[3] == ("x", None)
 
 
-def test_compact_small_files(spark, tmp_path):
+def test_optimize_table_compacts_small_files(spark, tmp_path):
     import glob as g
 
-    from music_streaming_etl_spark.sources.io import compact_small_files
+    from music_streaming_etl_spark.sources.io import optimize_table
 
     path = str(tmp_path / "fragmented")
     df = spark.range(0, 10_000).selectExpr("id", "id * 2 AS v")
     df.repartition(40).write.parquet(path)  # 40 tiny files
     assert len(g.glob(f"{path}/*.parquet")) == 40
-    n_after = compact_small_files(spark, path, target_file_bytes=10**9)
+    n_after = optimize_table(spark, path, target_file_bytes=10**9)
     assert n_after == 1
     back = spark.read.parquet(path)
     assert back.count() == 10_000

@@ -54,7 +54,10 @@ def ref_frames(spark):
         F.lit("album").alias("album_name"),
         F.concat(F.lit("track_"), F.substring("track_id", 1, 4)).alias("track_name"),
         F.concat(F.lit("genre_"), F.substring("track_id", 1, 1)).alias("track_genre"),
-        (F.ascii(F.substring("track_id", 1, 1)) * 3000).alias("duration_ms"),
+        (
+            F.ascii(F.substring("track_id", 1, 1)) * 3000
+            + F.ascii(F.substring("track_id", 5, 1))
+        ).alias("duration_ms"),
     )
     return streams, songs, users
 

@@ -308,47 +308,70 @@ def test_fingerprint_closure_sees_all_consecutive_local_imports():
         )
 
 
-def test_fingerprints_agree_across_checkouts(tmp_path):
-    """The determinism contract: two checkouts of one commit agree.
-    Keys whose inputs are paths resolved from a module file (the
-    committed reference sample, ``.scratch``) carry the checkout root
-    in their closure constants and oracle SQL — a copy of the package
-    at another path must still fingerprint every key identically.
-    Both sides run in a fresh process, as scripts/record_fingerprints.py
-    does."""
+def _fresh_process_fingerprints(root) -> dict[str, str]:
+    """``live_fingerprints(REGISTRY)`` of the package under ``root``,
+    taken in a fresh process, as scripts/record_fingerprints.py does."""
     import json
-    import shutil
     import subprocess
     import sys
 
-    import music_streaming_etl_spark as pkg
-
-    here = os.path.dirname(os.path.dirname(pkg.__file__))
-    shutil.copytree(
-        os.path.dirname(pkg.__file__),
-        tmp_path / "music_streaming_etl_spark",
-        ignore=shutil.ignore_patterns("__pycache__"),
-    )
     code = (
         "import json, music_streaming_etl_spark as p\n"
         "from music_streaming_etl_spark.plans.registry import REGISTRY\n"
         "from music_streaming_etl_spark.plans.fingerprints import live_fingerprints\n"
         "print(json.dumps([p.__file__, live_fingerprints(REGISTRY)]))"
     )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=root,
+        env={**os.environ, "PYTHONPATH": str(root)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    pkg_file, fps = json.loads(out.stdout.strip().splitlines()[-1])
+    assert pkg_file.startswith(str(root)), pkg_file
+    return fps
 
-    def fingerprints_from(root):
-        out = subprocess.run(
-            [sys.executable, "-c", code],
-            cwd=root,
-            env={**os.environ, "PYTHONPATH": str(root)},
-            capture_output=True,
-            text=True,
-            check=True,
-        )
-        pkg_file, fps = json.loads(out.stdout.strip().splitlines()[-1])
-        assert pkg_file.startswith(str(root)), pkg_file
-        return fps
 
-    original, copy = fingerprints_from(here), fingerprints_from(tmp_path)
+def _checkout_root() -> str:
+    import music_streaming_etl_spark as pkg
+
+    return os.path.dirname(os.path.dirname(pkg.__file__))
+
+
+def test_fingerprints_agree_across_checkouts(tmp_path):
+    """The determinism contract: two checkouts of one commit agree.
+    Keys whose inputs are paths resolved from a module file (the
+    committed reference sample, ``.scratch``) carry the checkout root
+    in their closure constants and oracle SQL — a copy of the package
+    at another path must still fingerprint every key identically.
+    Both sides run in a fresh process."""
+    import shutil
+
+    here = _checkout_root()
+    shutil.copytree(
+        os.path.join(here, "music_streaming_etl_spark"),
+        tmp_path / "music_streaming_etl_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    original = _fresh_process_fingerprints(here)
+    copy = _fresh_process_fingerprints(tmp_path)
     assert set(original) == set(REGISTRY)
     assert copy == original, sorted(k for k in original if copy.get(k) != original[k])
+
+
+def test_fingerprints_ignore_runtime_memos(spark, sf_dir):
+    """Runtime memos are not source: after ``_t`` and ``_tf`` reads
+    have filled the table-layout memo in this process, every key's
+    live fingerprint still equals a fresh process's."""
+    from music_streaming_etl_spark.plans.fingerprints import live_fingerprints
+    from music_streaming_etl_spark.plans.testdata_queries import _t, _tf
+
+    _t(spark, sf_dir, "orders")
+    _t(spark, sf_dir, "events")
+    _tf(spark, sf_dir, "lineitem", "l_orderkey")
+    live = live_fingerprints(REGISTRY)
+    fresh = _fresh_process_fingerprints(_checkout_root())
+    assert len(live) == len(REGISTRY) == 276
+    assert live == fresh, sorted(k for k in fresh if live.get(k) != fresh[k])

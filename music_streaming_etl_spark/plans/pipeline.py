@@ -83,7 +83,6 @@ def run_pipeline(
     users: DataFrame,
     genre_out: str | None = None,
     hourly_out: str | None = None,
-    raise_on_fail: bool = True,
     exact_distinct: bool = True,
 ) -> PipelineReport:
     """Execute the full flow. ``genre_out``/``hourly_out`` None skips
@@ -96,7 +95,7 @@ def run_pipeline(
         check_nonempty(users, "users_nonempty"),
         check_nonempty(songs, "songs_nonempty"),
     ]
-    validate(input_checks, raise_on_fail=raise_on_fail)
+    validate(input_checks)
 
     res: KpiResult = compute_kpis(
         streams, songs, users, cache=True, exact_distinct=exact_distinct
@@ -110,7 +109,7 @@ def run_pipeline(
         check_range(hourly, "hour", 0, 23, "hour_range"),
         check_no_nulls(genre, ["track_genre", "date"], "genre_keys_no_nulls"),
     ]
-    validate(output_checks, raise_on_fail=raise_on_fail)
+    validate(output_checks)
 
     # the nonempty checks already counted both frames
     genre_rows = output_checks[0].details["total_rows"]

@@ -12,12 +12,16 @@ real MERGE semantics on plain parquet, warehouse-free:
 Writes go to a temp subdir first and swap in atomically-enough for a
 batch pipeline (a lakehouse table format would make this transactional;
 the algorithm is identical to what Delta's MERGE materializes for
-full-partition rewrites).
+full-partition rewrites). A swap cut short after the old table was
+removed is finished by the next call, so the committed rewrite is not
+lost.
 
-Scale: the union+dedup shuffles on the merge key once. With the target
-partitioned by a date-ish column, ``merge_scope`` restricts the rewrite
-to the partitions present in the staging batch — at 100 TB you rewrite
-only the touched date partitions, not the table.
+Scale: the union+dedup shuffles on the merge key once, and the WHOLE
+target is read and rewritten on every call — every data trigger of a
+streaming sink, so the rows written grow with the table, not with the
+batch (perfbench ``kpi_stream``: ``upsert_amplification`` climbs from
+1.0 to 5.0 over 10 hourly drops). Rewriting only the partitions a batch
+touches is open (ROADMAP item 2).
 """
 
 from __future__ import annotations
@@ -29,6 +33,8 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .io import table_layout
 
 _PRIORITY = "__src_priority"
 _RN = "__merge_rn"
@@ -249,18 +255,17 @@ def upsert_parquet(
     keys: Sequence[str],
     order_by: Sequence[str] = (),
     staging_unique: bool = False,
-) -> DataFrame:
+) -> None:
     """Upsert ``staging`` into the parquet table at ``path`` (created
-    if absent) and return the merged frame re-read from disk."""
-    target = None
-    if os.path.exists(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
-    ):
-        target = spark.read.parquet(path)
-    merged = merge_upsert(target, staging, keys, order_by, staging_unique)
+    if absent). The merged table is written to ``<path>__staging_swap``
+    and then swapped in; if an earlier call removed ``path`` but died
+    before the swap, its committed write is swapped in first."""
     tmp = path.rstrip("/") + "__staging_swap"
+    if not os.path.exists(path) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
+        os.rename(tmp, path)
+    target = spark.read.parquet(path) if table_layout(path) is not None else None
+    merged = merge_upsert(target, staging, keys, order_by, staging_unique)
     merged.write.mode("overwrite").parquet(tmp)
     if os.path.exists(path):
         shutil.rmtree(path)
     os.rename(tmp, path)
-    return spark.read.parquet(path)

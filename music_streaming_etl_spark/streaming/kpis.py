@@ -25,22 +25,50 @@ Streaming:
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..schemas import STREAMS
 from ..sources.upsert import upsert_parquet
 
 
-def read_stream_csv(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def read_stream_csv(spark: SparkSession, path: str) -> DataFrame:
     """Streaming scan of the drop-zone directory with the declared
     STREAMS schema (never inferred)."""
-    reader = spark.readStream.schema(STREAMS).option("header", True)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.csv(path)
+    return spark.readStream.schema(STREAMS).option("header", True).csv(path)
+
+
+def start_upsert_stream(
+    df: DataFrame,
+    path: str,
+    keys: Sequence[str],
+    checkpoint: str,
+    available_now: bool = True,
+) -> StreamingQuery:
+    """The keyed-upsert sink: drain the update-mode stream ``df`` into
+    the parquet table at ``path``, each micro-batch MERGEd on ``keys``
+    by ``upsert_parquet``. Update-mode aggregate and per-key state
+    output is one row per key per batch, so the staging frame is
+    unique on ``keys`` by construction. An empty batch (the no-data
+    trigger that only advances the watermark) writes nothing.
+    ``available_now=True`` drains what the source holds, then stops."""
+
+    def sink(batch: DataFrame, _batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        upsert_parquet(batch.sparkSession, batch, path, keys=keys, staging_unique=True)
+
+    writer = (
+        df.writeStream.outputMode("update")
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(sink)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def windowed_kpis(
@@ -126,28 +154,12 @@ def start_artist_count_stream(
     songs: DataFrame,
     counts_path: str,
     checkpoint_dir: str,
-):
+) -> StreamingQuery:
     """Source → (window, artist) counts → upsert sink keyed on
     (window_start, artists): re-emitted windows replace their rows."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_parquet(
-            batch_df.sparkSession,
-            batch_df,
-            counts_path,
-            keys=["window_start", "artists"],
-            staging_unique=True,  # update-mode agg: one row per key per batch
-        )
-
     counts = windowed_artist_counts(read_stream_csv(spark, stream_dir), songs)
-    return (
-        counts.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
+    return start_upsert_stream(
+        counts, counts_path, ["window_start", "artists"], checkpoint_dir
     )
 
 
@@ -160,34 +172,22 @@ def start_kpi_stream(
     available_now: bool = True,
     watermark: str = "1 hour",
 ):
-    """Wire source → windowed agg → foreachBatch upsert sink.
+    """Wire source → windowed agg → upsert sink keyed on
+    (window_start, track_genre).
 
     ``available_now=True`` drains everything currently in the
     directory then stops — the batch-equivalent trigger used in tests
     and backfills; continuous deployments drop it for the default
-    micro-batch trigger. The upsert keys on (window_start,
-    track_genre): late-arriving data re-emits a window and the MERGE
-    replaces the stale row — the reference's drop-and-rebuild,
-    shrunk to only the affected windows.
+    micro-batch trigger. Late-arriving data re-emits a window and the
+    MERGE replaces the stale row. Every data trigger still reads and
+    rewrites the whole target, not only the affected windows (ROADMAP
+    item 2).
     """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_parquet(
-            batch_df.sparkSession,
-            batch_df,
-            target_path,
-            keys=["window_start", "track_genre"],
-            staging_unique=True,  # update-mode agg: one row per key per batch
-        )
-
     kpis = windowed_kpis(read_stream_csv(spark, stream_dir), songs, watermark)
-    writer = (
-        kpis.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
+    return start_upsert_stream(
+        kpis,
+        target_path,
+        ["window_start", "track_genre"],
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -25,11 +25,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sources.upsert import upsert_parquet
+from .kpis import start_upsert_stream
 
 
 def daily_rollup_stream(
@@ -55,7 +55,6 @@ def daily_rollup_stream(
 
 
 def start_daily_rollup_sink(
-    spark: SparkSession,
     daily: DataFrame,
     path: str,
     checkpoint: str,
@@ -63,21 +62,7 @@ def start_daily_rollup_sink(
 ) -> StreamingQuery:
     """Drain the streaming pre-aggregate into a parquet rollup table,
     replacing touched (bucket, keys) rows each micro-batch."""
-
-    def sink(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        upsert_parquet(
-            spark, batch, path, ["bucket", *keys], staging_unique=True
-        )  # update-mode agg: one row per key per batch
-
-    return (
-        daily.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_upsert_stream(daily, path, ["bucket", *keys], checkpoint)
 
 
 def hist_rollup_stream(
@@ -116,7 +101,6 @@ def hist_rollup_stream(
 
 
 def start_hist_rollup_sink(
-    spark: SparkSession,
     hist: DataFrame,
     path: str,
     checkpoint: str,
@@ -124,21 +108,7 @@ def start_hist_rollup_sink(
 ) -> StreamingQuery:
     """Drain the streaming histogram into a parquet sketch table,
     replacing touched (bucket, keys, bidx) rows each micro-batch."""
-
-    def sink(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        upsert_parquet(
-            spark, batch, path, ["bucket", *keys, "bidx"], staging_unique=True
-        )  # update-mode agg: one row per key per batch
-
-    return (
-        hist.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_upsert_stream(hist, path, ["bucket", *keys, "bidx"], checkpoint)
 
 
 def cms_rollup_stream(
@@ -189,7 +159,6 @@ def cms_rollup_stream(
 
 
 def start_cms_rollup_sink(
-    spark: SparkSession,
     cms: DataFrame,
     path: str,
     checkpoint: str,
@@ -197,22 +166,6 @@ def start_cms_rollup_sink(
 ) -> StreamingQuery:
     """Drain the streaming CMS into a parquet sketch table, replacing
     touched (bucket, keys, row_i, col_j) rows each micro-batch."""
-
-    def sink(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        upsert_parquet(
-            spark,
-            batch,
-            path,
-            ["bucket", *keys, "row_i", "col_j"],
-            staging_unique=True,  # update-mode agg: one row per key per batch
-        )
-
-    return (
-        cms.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
+    return start_upsert_stream(
+        cms, path, ["bucket", *keys, "row_i", "col_j"], checkpoint
     )

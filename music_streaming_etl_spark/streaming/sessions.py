@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .kpis import start_upsert_stream
+
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType(), False),
@@ -112,31 +114,11 @@ def start_session_stream(
 ):
     """File-source → stateful sessionize → upsert sink (latest session
     row per user)."""
-    from ..sources.upsert import upsert_parquet
-
     events = (
         spark.readStream.schema(schema).option("header", True).csv(stream_dir)
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_parquet(
-            batch_df.sparkSession,
-            batch_df,
-            target_path,
-            keys=["user_id"],
-            staging_unique=True,  # update-mode session state: one row per user per batch
-        )
-
     sessions = sessionize_stream(events, gap_seconds)
-    return (
-        sessions.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_upsert_stream(sessions, target_path, ["user_id"], checkpoint_dir)
 
 
 CLOSED_SCHEMA = T.StructType(

@@ -6,6 +6,8 @@ affected window rows, not duplicate them."""
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -67,6 +69,47 @@ def test_streaming_windowed_upsert(spark, songs, tmp_path):
     assert out2[(10, "rock")]["listen_count"] == 3
     assert out2[(10, "rock")]["unique_listeners"] == 3
     assert len([k for k in out2 if k[1] == "rock" and k[0] == 10]) == 1
+
+
+def test_kpi_sink_contract_from_progress(spark, songs, tmp_path):
+    """Two drops drained through ``start_kpi_stream``, checked against
+    the query's own ``recentProgress``: one target row per key, a
+    trailing no-data trigger that writes nothing, and state held to
+    the two windows a 1-hour watermark leaves open per genre. The
+    bound is read where the watermark has been applied, the trailing
+    trigger: a data trigger is planned under the previous watermark,
+    and its state metrics also count the sink's ``isEmpty()`` pass
+    (ROADMAP item 2)."""
+    stream_dir = str(tmp_path / "in")
+    target = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    t = dt.datetime(2024, 6, 25, 10, 15)
+    genres = 2
+    t11, t12 = t.replace(hour=11), t.replace(hour=12)
+    drops = [
+        [(1, "t1", t), (2, "t2", t), (3, "t1", t11), (4, "t2", t11)],
+        # hour 12 opens a window and closes hour 10; 11:50 is late, not dropped
+        [(5, "t1", t12), (6, "t2", t12), (7, "t1", t11.replace(minute=50))],
+    ]
+    for drop in drops:
+        _write_csv(spark, drop, stream_dir)
+        q = start_kpi_stream(spark, stream_dir, songs, target, ckpt)
+        q.awaitTermination(120)
+        last = q.recentProgress[-1]
+        assert last["numInputRows"] == 0, "no trailing no-data trigger"
+        started = dt.datetime.fromisoformat(
+            last["timestamp"].replace("Z", "+00:00")
+        )
+        files = glob.glob(os.path.join(target, "*"))
+        assert max(os.path.getmtime(f) for f in files) < started.timestamp()
+        assert last["stateOperators"][0]["numRowsTotal"] <= 2 * genres
+
+    assert last["stateOperators"][0]["numRowsRemoved"] == genres  # hour 10 evicted
+    rows = spark.read.parquet(target).collect()
+    keys = [(r["window_start"], r["track_genre"]) for r in rows]
+    assert len(keys) == len(set(keys)) == 3 * genres
+    late = [r for r in rows if (r["hour"], r["track_genre"]) == (11, "rock")]
+    assert [r["listen_count"] for r in late] == [2]
 
 
 def test_streaming_top_artists(spark, tmp_path):

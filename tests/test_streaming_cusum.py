@@ -6,11 +6,11 @@ from __future__ import annotations
 
 import datetime as dt
 
-from music_streaming_etl_spark.sources.upsert import upsert_parquet
 from music_streaming_etl_spark.streaming.cusum import (
     cusum_batch,
     cusum_stream,
 )
+from music_streaming_etl_spark.streaming.kpis import start_upsert_stream
 
 SCHEMA = "event_id long, user_id long, ts timestamp, event_type string, value double"
 K_CENTS = 5000  # reference level $50.00
@@ -30,25 +30,7 @@ def _drain(spark, stream_dir, out, ckpt):
         .csv(stream_dir)
     )
     cus = cusum_stream(events, K_CENTS, H_CENTS)
-
-    def sink(batch, _id):
-        if batch.isEmpty():
-            return
-        upsert_parquet(
-            batch.sparkSession,
-            batch,
-            out,
-            keys=["event_type"],
-            staging_unique=True,
-        )
-
-    q = (
-        cus.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = start_upsert_stream(cus, out, ["event_type"], ckpt)
     q.awaitTermination(120)
 
 

@@ -8,12 +8,12 @@ import math
 
 import numpy as np
 
-from music_streaming_etl_spark.sources.upsert import upsert_parquet
 from music_streaming_etl_spark.streaming.drift import (
     drift_batch,
     drift_stream,
     l2_shift,
 )
+from music_streaming_etl_spark.streaming.kpis import start_upsert_stream
 
 DIMS = 8
 BASELINE = [0] * DIMS  # zero-centred reference centroid (micro-units)
@@ -37,20 +37,7 @@ def _drain(spark, stream_dir, out, ckpt):
     vectors = spark.readStream.schema(
         "vec_id long, embedding array<double>"
     ).parquet(stream_dir)
-    q = (
-        drift_stream(vectors, BASELINE)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(
-            lambda b, _id: None
-            if b.isEmpty()
-            else upsert_parquet(
-                b.sparkSession, b, out, keys=["dim"], staging_unique=True
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = start_upsert_stream(drift_stream(vectors, BASELINE), out, ["dim"], ckpt)
     q.awaitTermination(120)
 
 

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from music_streaming_etl_spark.operators.timeseries import funnel_counts
 from music_streaming_etl_spark.streaming.funnel import funnel_stream
-from music_streaming_etl_spark.sources.upsert import upsert_parquet
+from music_streaming_etl_spark.streaming.kpis import start_upsert_stream
 
 SCHEMA = "event_id long, user_id long, ts timestamp, event_type string"
 STEPS = ["view", "click", "purchase"]
@@ -26,21 +26,7 @@ def _drain(spark, stream_dir, out, ckpt):
         spark.readStream.schema(SCHEMA).option("header", True).csv(stream_dir)
     )
     fun = funnel_stream(events, STEPS)
-
-    def sink(batch, _id):
-        if batch.isEmpty():
-            return
-        upsert_parquet(
-            batch.sparkSession, batch, out, keys=["user_id"], staging_unique=True
-        )
-
-    q = (
-        fun.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = start_upsert_stream(fun, out, ["user_id"], ckpt)
     q.awaitTermination(120)
 
 

@@ -28,7 +28,7 @@ def _drain(spark, stream_dir, out, ckpt):
         spark.readStream.schema(SCHEMA).option("header", True).csv(stream_dir)
     )
     daily = daily_rollup_stream(events, "ts", ["kind"], "amount")
-    q = start_daily_rollup_sink(spark, daily, out, ckpt, ["kind"])
+    q = start_daily_rollup_sink(daily, out, ckpt, ["kind"])
     q.awaitTermination(120)
 
 
@@ -112,7 +112,7 @@ def test_streamed_histogram_matches_batch_and_serves_quantiles(spark, tmp_path):
         hist = hist_rollup_stream(
             events, "ts", ["kind"], "amount", 0.0, 100.0, 10
         )
-        q = start_hist_rollup_sink(spark, hist, out, ckpt, ["kind"])
+        q = start_hist_rollup_sink(hist, out, ckpt, ["kind"])
         q.awaitTermination(120)
 
     rows1 = [(1, "a", d1, 5.0), (2, "a", d1, 15.0), (3, "a", d1, 17.0)]
@@ -156,7 +156,7 @@ def test_streamed_cms_matches_batch_and_estimates(spark, tmp_path):
             spark.readStream.schema(SCHEMA).option("header", True).csv(stream_dir)
         )
         cms = cms_rollup_stream(events, "ts", [], "user_id", depth=4, width=64)
-        q = start_cms_rollup_sink(spark, cms, out, ckpt, [])
+        q = start_cms_rollup_sink(cms, out, ckpt, [])
         q.awaitTermination(120)
 
     rows1 = [(7, "a", d1, 1.0)] * 5 + [(9, "b", d1, 1.0)] * 2

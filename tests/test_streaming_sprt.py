@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from music_streaming_etl_spark.sources.upsert import upsert_parquet
+from music_streaming_etl_spark.streaming.kpis import start_upsert_stream
 from music_streaming_etl_spark.streaming.sprt import sprt_batch, sprt_stream
 
 SCHEMA = "event_id long, user_id long, ts timestamp, event_type string, value double"
@@ -24,23 +24,8 @@ def _drain(spark, stream_dir, out, ckpt, threshold=5):
         .option("header", True)
         .csv(stream_dir)
     )
-    q = (
-        sprt_stream(events, threshold=threshold)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(
-            lambda b, _id: None
-            if b.isEmpty()
-            else upsert_parquet(
-                b.sparkSession,
-                b,
-                out,
-                keys=["event_type"],
-                staging_unique=True,
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    q = start_upsert_stream(
+        sprt_stream(events, threshold=threshold), out, ["event_type"], ckpt
     )
     q.awaitTermination(120)
 

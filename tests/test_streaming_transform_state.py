@@ -16,7 +16,7 @@ import importlib.util
 
 import pytest
 
-from music_streaming_etl_spark.sources.upsert import upsert_parquet
+from music_streaming_etl_spark.streaming.kpis import start_upsert_stream
 from music_streaming_etl_spark.streaming.state import (
     ROCKSDB_PROVIDER,
     user_activity_batch,
@@ -45,19 +45,7 @@ def _drain(spark, stream_dir, out, ckpt):
         spark.readStream.schema(SCHEMA).option("header", True).csv(stream_dir)
     )
     acts = user_activity_stream(events)
-
-    def sink(batch, _id):
-        if batch.isEmpty():
-            return
-        upsert_parquet(batch.sparkSession, batch, out, keys=["user_id"])
-
-    q = (
-        acts.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = start_upsert_stream(acts, out, ["user_id"], ckpt)
     q.awaitTermination(180)
 
 

@@ -3,6 +3,8 @@ upsert (the reference spec's unimplemented MERGE deliverable)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -98,12 +100,52 @@ def test_merge_upsert_semantics(spark):
 def test_upsert_parquet_roundtrip(spark, tmp_path):
     path = str(tmp_path / "tbl")
     s1 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], "k long, v string, ver int")
-    out1 = upsert_parquet(spark, s1, path, ["k"], ["ver"])
-    assert out1.count() == 2
+    upsert_parquet(spark, s1, path, ["k"], ["ver"])
+    assert spark.read.parquet(path).count() == 2
     s2 = spark.createDataFrame([(2, "b2", 2), (3, "c", 1)], "k long, v string, ver int")
-    out2 = upsert_parquet(spark, s2, path, ["k"], ["ver"])
-    got = {r["k"]: r["v"] for r in out2.collect()}
+    upsert_parquet(spark, s2, path, ["k"], ["ver"])
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {1: "a", 2: "b2", 3: "c"}
+
+
+def test_upsert_parquet_finishes_an_interrupted_swap(spark, tmp_path, monkeypatch):
+    """A failure after the old table is removed but before the merged
+    copy is renamed into place loses nothing: the next call swaps the
+    committed copy in first, then merges into it."""
+    path = str(tmp_path / "tbl")
+    schema = "k long, v string, ver int"
+    s1 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], schema)
+    upsert_parquet(spark, s1, path, ["k"], ["ver"])
+
+    rename = os.rename
+
+    def fail_once(src, dst):
+        monkeypatch.setattr(os, "rename", rename)
+        raise OSError("interrupted before the swap")
+
+    monkeypatch.setattr(os, "rename", fail_once)
+    s2 = spark.createDataFrame([(2, "b2", 2), (3, "c", 1)], schema)
+    with pytest.raises(OSError, match="interrupted"):
+        upsert_parquet(spark, s2, path, ["k"], ["ver"])
+    assert not os.path.exists(path)
+
+    s3 = spark.createDataFrame([(4, "d", 1)], schema)
+    upsert_parquet(spark, s3, path, ["k"], ["ver"])
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got == {1: "a", 2: "b2", 3: "c", 4: "d"}
+
+
+def test_upsert_parquet_keeps_a_partitioned_target(spark, tmp_path):
+    """A Hive-partitioned target is a table, not an absent one: its
+    unmatched rows survive the upsert."""
+    path = str(tmp_path / "tbl")
+    schema = "k long, v string, p int"
+    target = spark.createDataFrame([(1, "a", 1), (2, "b", 2)], schema)
+    target.write.partitionBy("p").parquet(path)
+    s1 = spark.createDataFrame([(2, "b2", 2)], schema)
+    upsert_parquet(spark, s1, path, ["k"], staging_unique=True)
+    got = {r["k"]: (r["v"], r["p"]) for r in spark.read.parquet(path).collect()}
+    assert got == {1: ("a", 1), 2: ("b2", 2)}
 
 
 def test_observed_metrics_ride_the_write(spark, tmp_path):

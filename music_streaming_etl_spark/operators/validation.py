@@ -5,12 +5,23 @@ The reference runs validation as two dedicated DAG tasks
 aggregates pushed to Postgres (``:65-80``) and pandas checks on the
 extracted frames (``:124-169, 214-242``), raising on violation.
 
-Here each check is a *single aggregation action* on the DataFrame —
-one distributed pass, no collect of data rows, only the 1-row report
-crosses to the driver. A suite of N checks is therefore N actions;
-``validate()`` runs nothing itself, it combines the results of checks
-that have already run and raises on any failure.
-``observed_quality_metrics`` is the zero-extra-pass alternative.
+Here each check is a *single action* on the DataFrame — one
+distributed pass, no collect of data rows, only the 1-row report
+crosses to the driver. ``check_nonempty`` is ``isEmpty()``, a read
+that stops at the first row; ``check_no_nulls`` and ``check_range``
+are one aggregate each and also report the frame's ``total_rows``, so
+a caller that needs V1 and V2 (or V1 and V3) on one frame reads V1
+from that total instead of paying a second pass. ``validate()`` runs
+nothing itself: it combines the results of checks that have already
+run and raises on any failure.
+
+``observed_quality_metrics`` folds V1+V2 into a frame's next action
+instead. It is not fail-closed on pyspark 4.1.2: ``Observation.get``
+raised ``Py4JJavaError`` (an ``AssertionError`` in
+``PythonSQLUtils.toPyRow``) when the observed frame was empty, both
+for a header-only users CSV feeding the broadcast side of a join and
+for an empty ``createDataFrame`` streams frame — exactly the inputs a
+non-empty check exists to catch.
 """
 
 from __future__ import annotations
@@ -37,9 +48,9 @@ class CheckResult:
 
 
 def check_nonempty(df: DataFrame, name: str = "nonempty") -> CheckResult:
-    """V1 — fail on zero rows (ref :152-154; SQL form :65-72)."""
-    n = df.count()
-    return CheckResult(name, n > 0, {"total_rows": n})
+    """V1 — fail on zero rows (ref :152-154; SQL form :65-72).
+    ``isEmpty()`` reads up to the first row, not the whole frame."""
+    return CheckResult(name, not df.isEmpty())
 
 
 def check_no_nulls(
@@ -47,20 +58,27 @@ def check_no_nulls(
 ) -> CheckResult:
     """V2 — all listed columns must be fully non-null, in ONE pass
     (the reference's per-column ``COUNT(CASE WHEN col IS NULL…)``,
-    ref :65-80 / ``isnull().sum()`` :156-162)."""
+    ref :65-80 / ``isnull().sum()`` :156-162). The same pass counts
+    ``total_rows``."""
     row = df.agg(
-        *[F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in cols]
+        F.count(F.lit(1)),
+        *[F.count(F.when(F.col(c).isNull(), 1)) for c in cols],
     ).collect()[0]
-    nulls = {c: row[c] for c in cols if row[c] > 0}
-    return CheckResult(name, not nulls, {"null_counts": nulls})
+    nulls = {c: n for c, n in zip(cols, row[1:]) if n > 0}
+    return CheckResult(
+        name, not nulls, {"null_counts": nulls, "total_rows": row[0]}
+    )
 
 
 def check_range(
     df: DataFrame, col: str, lo, hi, name: str = "range"
 ) -> CheckResult:
-    """V3 — every non-null value within [lo, hi] (ref :231-232)."""
-    bad = df.filter(~F.col(col).between(lo, hi)).count()
-    return CheckResult(name, bad == 0, {"out_of_range": bad})
+    """V3 — every non-null value within [lo, hi] (ref :231-232), in
+    one aggregate that also counts ``total_rows``."""
+    total, bad = df.agg(
+        F.count(F.lit(1)), F.count(F.when(~F.col(col).between(lo, hi), 1))
+    ).collect()[0]
+    return CheckResult(name, bad == 0, {"out_of_range": bad, "total_rows": total})
 
 
 _INTEGRAL_GATE = r"^\s*[+-]?[0-9]+\s*$"
@@ -309,7 +327,9 @@ def observed_quality_metrics(
     Returns ``(observed_df, observation)``; read
     ``observation.get`` AFTER an action has run on ``observed_df``.
     Pair with ``observation_result`` to turn the metric dict into the
-    same CheckResult the rest of the suite composes.
+    same CheckResult the rest of the suite composes. On an empty
+    observed frame ``observation.get`` can raise instead of reporting
+    zero rows (module docstring), so a fail-closed V1 stays a check.
     """
     from pyspark.sql import Observation
 

@@ -18,11 +18,16 @@ Semantics matched bit-for-bit to pandas (SURVEY.md §2.4):
   (pandas leaves it engine-internal — documented divergence).
 
 Scale: the joined intermediate is consumed by both branches — cache()
-avoids recomputing the joins. Both dims broadcast (no fact shuffle);
-each branch shuffles once on its (low-cardinality) group key, with
-partial aggregation map-side. At 100 TB the only state that grows is
-the distinct-count in the hourly branch — swap ``exact_distinct=False``
-to use HLL.
+avoids recomputing the joins. Both dims broadcast (no fact shuffle).
+Each branch is an aggregate joined to a window over counts, and every
+exchange is on a low-cardinality key with partial aggregation
+map-side. The genre branch is the (genre, date) aggregate ⋈
+``agg_mode`` over three exchanges: (genre, date), the mode's count on
+(genre, date, track_name), and its window on (genre, date); the join
+reuses that partitioning. The hourly branch is the fused distinct
+aggregate (two exchanges) ⋈ ``agg_topk_by_freq`` (two more). At
+100 TB the only state that grows is the distinct-count in the hourly
+branch — swap ``exact_distinct=False`` to use HLL.
 """
 
 from __future__ import annotations

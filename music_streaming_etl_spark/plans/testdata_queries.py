@@ -839,9 +839,9 @@ FROM read_blob('{BINARY_FIXTURE_DIR}/*.csv')
 
 def ref_pipeline_genre_kpis(spark: SparkSession, data_dir: str) -> DataFrame:
     """The reference's full compute_kpis genre branch (extract →
-    enrich joins → fused mode+agg) over a data dir in the reference's
-    layout: ``streams/streams{1,2,3}.csv`` read as one multi-path scan
-    plus ``users/users.csv``. The songs dim derives deterministically
+    enrich joins → aggregate ⋈ window mode) over a data dir in the
+    reference's layout: ``streams/streams{1,2,3}.csv`` read as one
+    multi-path scan plus ``users/users.csv``. The songs dim derives deterministically
     from each track_id (the duration from two of its characters, so
     tracks of one genre differ) — the same synthesis as
     :func:`ref_pipeline_oracle_sql`, so the comparison pins every join,
